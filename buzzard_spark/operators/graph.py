@@ -202,6 +202,16 @@ def _pagerank_fast_collect(base_nodes: DataFrame, edges: DataFrame,
     return [r['v'] for r in nrows], [(r['src'], r['dst']) for r in erows]
 
 
+def _seeds_fast_collect(seeds: DataFrame, cap: int):
+    """Seed half of the small-graph probe: the distinct values of the
+    seeds' first column when there are at most ``cap`` of them (one
+    limit-collect), else None — the caller then takes its distributed
+    path, so a huge seed set never lands on the driver."""
+    rows = (seeds.select(F.col(seeds.columns[0]).alias('v')).distinct()
+            .limit(cap + 1).collect())
+    return [r['v'] for r in rows] if len(rows) <= cap else None
+
+
 def pagerank_exact_uniform(nodes: DataFrame, edges: DataFrame,
                            iters: int = 3, d_out: int = 4,
                            id_col: str = 'v',
@@ -573,19 +583,19 @@ def bfs_hops(edges: DataFrame, seeds: DataFrame, max_hops: int,
     # Small-graph fast path (same design, cap and rationale as
     # connected_components): ONE cached limit-collect both decides and
     # delivers the rows (≤ cap rows back means the WHOLE edge set came
-    # back); at or below the cap the BFS runs as a driver dict walk — a
-    # bounded driver trip replacing up to max_hops shuffle rounds whose
-    # per-job scheduling latency dominates small graphs. Both paths emit
-    # the identical min-hop labeling (pinned by pytest).
+    # back); at or below the cap — for the edges AND the distinct seeds —
+    # the BFS runs as a driver dict walk, a bounded driver trip replacing
+    # up to max_hops shuffle rounds whose per-job scheduling latency
+    # dominates small graphs. Both paths emit the identical min-hop
+    # labeling (pinned by pytest).
     probe = e.limit(small_graph_edges + 1).collect()
-    if len(probe) <= small_graph_edges:
+    seed_vals = (_seeds_fast_collect(seeds, small_graph_edges)
+                 if len(probe) <= small_graph_edges else None)
+    if seed_vals is not None:
         from buzzard_spark.session import release_blocks
         adj: dict = {}
         for row in probe:
             adj.setdefault(row['_s'], []).append(row['_d'])
-        seed_vals = [r['node'] for r in
-                     seeds.select(F.col(seeds.columns[0]).alias('node'))
-                     .distinct().collect()]
         hop_of = {s: 0 for s in seed_vals}
         frontier = list(hop_of)
         for h in range(1, max_hops + 1):
@@ -607,6 +617,7 @@ def bfs_hops(edges: DataFrame, seeds: DataFrame, max_hops: int,
             [(n, h) for n, h in hop_of.items()], schema)
         release_blocks([e])
         return out
+    del probe  # the distributed rounds read the cached edge set
 
     visited = (seeds.select(F.col(seeds.columns[0]).alias('node'))
                .distinct()
@@ -691,12 +702,15 @@ def sssp_hops(edges: DataFrame, seeds: DataFrame, max_hops: int,
     e = e0.localCheckpoint(eager=True)
 
     # Small-graph fast path (connected_components' design): one cached
-    # limit-collect decides and delivers; ≤ cap edges run the identical
-    # hop-bounded Bellman-Ford as a driver dict relaxation — exact
-    # integer arithmetic, same min-dist labels (pinned by pytest), none
-    # of the per-round job latency that dominates small graphs.
+    # limit-collect decides and delivers; ≤ cap edges and ≤ cap distinct
+    # seeds run the identical hop-bounded Bellman-Ford as a driver dict
+    # relaxation — exact integer arithmetic, same min-dist labels (pinned
+    # by pytest), none of the per-round job latency that dominates small
+    # graphs.
     probe = e.limit(small_graph_edges + 1).collect()
-    if len(probe) <= small_graph_edges:
+    seed_vals = (_seeds_fast_collect(seeds, small_graph_edges)
+                 if len(probe) <= small_graph_edges else None)
+    if seed_vals is not None:
         from buzzard_spark.session import release_blocks
         adj: dict = {}
         for row in probe:
@@ -704,9 +718,6 @@ def sssp_hops(edges: DataFrame, seeds: DataFrame, max_hops: int,
                 release_blocks([e])
                 raise ValueError('negative edge weights are not supported')
             adj.setdefault(row['_s'], []).append((row['_d'], row['_w']))
-        seed_vals = [r['node'] for r in
-                     seeds.select(F.col(seeds.columns[0]).alias('node'))
-                     .distinct().collect()]
         dist_of = {s: 0 for s in seed_vals}
         frontier = dict(dist_of)
         for _ in range(max_hops):
@@ -731,6 +742,7 @@ def sssp_hops(edges: DataFrame, seeds: DataFrame, max_hops: int,
             [(n, d) for n, d in dist_of.items()], schema)
         release_blocks([e])
         return out
+    del probe  # the distributed rounds read the cached edge set
 
     # distributed path: validate on the cached edge set, releasing the
     # blocks on the error path (the fast path validated row-by-row above)
@@ -825,10 +837,9 @@ def trustrank_exact_uniform(nodes: DataFrame, edges: DataFrame,
     fast = _pagerank_fast_collect(base_nodes, edges, small_graph_edges)
     if fast is not None:
         node_vals, edge_rows = fast
-        seed_rows = (seeds.select(F.col(seeds.columns[0]).alias('v'))
-                     .distinct().limit(small_graph_edges + 1).collect())
-        if len(seed_rows) <= small_graph_edges:
-            t = set(r['v'] for r in seed_rows)
+        seed_vals = _seeds_fast_collect(seeds, small_graph_edges)
+        if seed_vals is not None:
+            t = set(seed_vals)
             a = {v: (1 if v in t else 0) for v in node_vals}
             for k in range(1, iters + 1):
                 base = 3 * d_out * M ** (k - 1)

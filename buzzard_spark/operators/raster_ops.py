@@ -59,81 +59,68 @@ def tile_grid_df(spark: SparkSession, fp, tile_size: int) -> DataFrame:
     )
 
 
-def rasterize(spark: SparkSession, fp, polys: DataFrame,
-              tile_size: int = 256) -> DataFrame:
-    """polys (region_id, wkb, minlat, minlng, maxlat, maxlng — world bbox)
-    → tile mask rows. Only tiles intersecting ≥1 polygon are emitted."""
+def _tile_candidates(spark: SparkSession, fp, geoms: DataFrame,
+                     tile_size: int) -> DataFrame:
+    """tiles ⨝ broadcast(geoms) on world-bbox overlap: one row per (tile,
+    candidate geometry), carrying the tile's grid columns and the
+    geometry's columns (wkb, minlat, minlng, maxlat, maxlng, ...)."""
     a, b, c, d, e, f = fp._coef
-    tiles = tile_grid_df(spark, fp, tile_size)
     # world bbox of each tile (north-up: a>0, e<0)
-    tiles = tiles.select(
+    tiles = tile_grid_df(spark, fp, tile_size).select(
         '*',
         (F.col('x0') * a + c).alias('t_minx'),
         ((F.col('x0') + F.col('w')) * a + c).alias('t_maxx'),
         ((F.col('y0') + F.col('h')) * e + f).alias('t_miny'),
         (F.col('y0') * e + f).alias('t_maxy'),
     )
-    cand = tiles.join(
-        F.broadcast(polys),
+    return tiles.join(
+        F.broadcast(geoms),
         (F.col('t_minx') <= F.col('maxlng')) & (F.col('t_maxx') >= F.col('minlng')) &
         (F.col('t_miny') <= F.col('maxlat')) & (F.col('t_maxy') >= F.col('minlat')))
 
+
+def _tile_fp(gt, row):
+    """Footprint of one tile row: the grid's geotransform ``gt`` shifted to
+    the tile's (y0, x0) corner, raster size (w, h)."""
+    from buzzard_spark.kernels.footprint import Footprint
+    tile_gt = list(gt)
+    tile_gt[0] = gt[0] + int(row.x0) * gt[1]
+    tile_gt[3] = gt[3] + int(row.y0) * gt[5]
+    return Footprint(gt=tile_gt, rsize=(int(row.w), int(row.h)))
+
+
+def _burn_tiles(spark: SparkSession, fp, geoms: DataFrame, tile_size: int,
+                burn) -> DataFrame:
+    """Candidate join, then ``burn(tile_fp, wkbs)`` of every tile's
+    candidates → tile mask rows."""
     gt = tuple(float(v) for v in fp.gt)
 
     def _burn(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        from buzzard_spark.kernels.footprint import Footprint
         row = pdf.iloc[0]
-        y0, x0, h, w = int(row.y0), int(row.x0), int(row.h), int(row.w)
-        tile_gt = list(gt)
-        tile_gt[0] = gt[0] + x0 * gt[1]
-        tile_gt[3] = gt[3] + y0 * gt[5]
-        tile_fp = Footprint(gt=tile_gt, rsize=(w, h))
-        mask = raster.burn_polygons(tile_fp, [bytes(b) for b in pdf['wkb']])
+        mask = burn(_tile_fp(gt, row), [bytes(b) for b in pdf['wkb']])
         return pd.DataFrame([{
             'tile_y': int(row.tile_y), 'tile_x': int(row.tile_x),
-            'y0': y0, 'x0': x0, 'h': h, 'w': w,
+            'y0': int(row.y0), 'x0': int(row.x0),
+            'h': int(row.h), 'w': int(row.w),
             'mask': bytearray(np.packbits(mask).tobytes()),
         }])
 
-    return cand.groupBy('tile_y', 'tile_x').applyInPandas(_burn, TILE_SCHEMA)
+    return (_tile_candidates(spark, fp, geoms, tile_size)
+            .groupBy('tile_y', 'tile_x').applyInPandas(_burn, TILE_SCHEMA))
+
+
+def rasterize(spark: SparkSession, fp, polys: DataFrame,
+              tile_size: int = 256) -> DataFrame:
+    """polys (region_id, wkb, minlat, minlng, maxlat, maxlng — world bbox)
+    → tile mask rows. Only tiles intersecting ≥1 polygon are emitted."""
+    return _burn_tiles(spark, fp, polys, tile_size, raster.burn_polygons)
 
 
 def rasterize_lines(spark: SparkSession, fp, lines: DataFrame,
                     tile_size: int = 256) -> DataFrame:
     """linestrings (line_id, wkb, minlat, minlng, maxlat, maxlng) → tile
     mask rows via per-tile DDA burn (kernels.raster.burn_lines)."""
-    a, b, c, d, e, f = fp._coef
-    tiles = tile_grid_df(spark, fp, tile_size)
-    tiles = tiles.select(
-        '*',
-        (F.col('x0') * a + c).alias('t_minx'),
-        ((F.col('x0') + F.col('w')) * a + c).alias('t_maxx'),
-        ((F.col('y0') + F.col('h')) * e + f).alias('t_miny'),
-        (F.col('y0') * e + f).alias('t_maxy'),
-    )
-    cand = tiles.join(
-        F.broadcast(lines),
-        (F.col('t_minx') <= F.col('maxlng')) & (F.col('t_maxx') >= F.col('minlng')) &
-        (F.col('t_miny') <= F.col('maxlat')) & (F.col('t_maxy') >= F.col('minlat')))
-
-    gt = tuple(float(v) for v in fp.gt)
-
-    def _burn(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        from buzzard_spark.kernels.footprint import Footprint
-        row = pdf.iloc[0]
-        y0, x0, h, w = int(row.y0), int(row.x0), int(row.h), int(row.w)
-        tile_gt = list(gt)
-        tile_gt[0] = gt[0] + x0 * gt[1]
-        tile_gt[3] = gt[3] + y0 * gt[5]
-        tile_fp = Footprint(gt=tile_gt, rsize=(w, h))
-        mask = raster.burn_lines(tile_fp, [bytes(b_) for b_ in pdf['wkb']])
-        return pd.DataFrame([{
-            'tile_y': int(row.tile_y), 'tile_x': int(row.tile_x),
-            'y0': y0, 'x0': x0, 'h': h, 'w': w,
-            'mask': bytearray(np.packbits(mask).tobytes()),
-        }])
-
-    return cand.groupBy('tile_y', 'tile_x').applyInPandas(_burn, TILE_SCHEMA)
+    return _burn_tiles(spark, fp, lines, tile_size, raster.burn_lines)
 
 
 def rasterize_counts(spark: SparkSession, fp, polys: DataFrame,
@@ -144,39 +131,21 @@ def rasterize_counts(spark: SparkSession, fp, polys: DataFrame,
     The aggregation-shaped variant of ``rasterize`` — the distributed
     answer to "how many pixels does each polygon cover on this grid".
     """
-    a, b, c, d, e, f = fp._coef
-    tiles = tile_grid_df(spark, fp, tile_size)
-    tiles = tiles.select(
-        '*',
-        (F.col('x0') * a + c).alias('t_minx'),
-        ((F.col('x0') + F.col('w')) * a + c).alias('t_maxx'),
-        ((F.col('y0') + F.col('h')) * e + f).alias('t_miny'),
-        (F.col('y0') * e + f).alias('t_maxy'),
-    )
-    cand = tiles.join(
-        F.broadcast(polys),
-        (F.col('t_minx') <= F.col('maxlng')) & (F.col('t_maxx') >= F.col('minlng')) &
-        (F.col('t_miny') <= F.col('maxlat')) & (F.col('t_maxy') >= F.col('minlat')))
-
     gt = tuple(float(v) for v in fp.gt)
 
     def _count(key, pdf: pd.DataFrame) -> pd.DataFrame:
         # one Python round-trip per TILE; all its candidate regions burn
         # in a numpy loop (one tiny group per (tile, region) would pay the
         # Arrow/pickle overhead per region instead)
-        from buzzard_spark.kernels.footprint import Footprint
-        row = pdf.iloc[0]
-        tile_gt = list(gt)
-        tile_gt[0] = gt[0] + int(row.x0) * gt[1]
-        tile_gt[3] = gt[3] + int(row.y0) * gt[5]
-        tile_fp = Footprint(gt=tile_gt, rsize=(int(row.w), int(row.h)))
+        tile_fp = _tile_fp(gt, pdf.iloc[0])
         out = []
         for rid, wkb in zip(pdf['region_id'], pdf['wkb']):
             mask = raster.burn_polygons(tile_fp, [bytes(wkb)])
             out.append({'region_id': int(rid), 'n_pixels': int(mask.sum())})
         return pd.DataFrame(out)
 
-    return (cand.groupBy('tile_y', 'tile_x')
+    return (_tile_candidates(spark, fp, polys, tile_size)
+            .groupBy('tile_y', 'tile_x')
             .applyInPandas(_count, 'region_id long, n_pixels long')
             .groupBy('region_id')
             .agg(F.sum('n_pixels').alias('n_pixels'))
@@ -235,90 +204,27 @@ LINE_SCHEMA = 'chain_id long, wkb binary, n_pts int'
 _THIN_SCHEMA = TILE_SCHEMA + ', _chg long'
 
 
-def _thin_subiter(tiles: DataFrame, sub: int, carry: bool) -> DataFrame:
-    """One distributed thinning subiteration: every tile deletes from its
-    own pixels using a 1-px halo of neighbor border pixels — the exact
-    simultaneous-deletion semantics of the kernel's ``raster._thin_delete``
-    snapshot rule, so the converged distributed mask is bit-identical to
-    ``kernels.raster.thin`` on the stitched array. ``carry`` accumulates
-    the deletion count across the iteration's two subiterations."""
-    def _emit_halo(iterator):
-        for pdf in iterator:
-            frames = []
-            for _, row in pdf.iterrows():
-                h, w = int(row.h), int(row.w)
-                mask = _unpack_mask(row['mask'], h, w)
-                ys, xs = np.nonzero(mask)
-                if not len(ys):
-                    continue
-                gy = (ys + int(row.y0)).astype(np.int32)
-                gx = (xs + int(row.x0)).astype(np.int32)
-                top, bot = ys == 0, ys == h - 1
-                lef, rig = xs == 0, xs == w - 1
-                for dy, dx, sel in ((-1, 0, top), (1, 0, bot),
-                                    (0, -1, lef), (0, 1, rig),
-                                    (-1, -1, top & lef), (-1, 1, top & rig),
-                                    (1, -1, bot & lef), (1, 1, bot & rig)):
-                    n = int(sel.sum())
-                    if n:
-                        frames.append(pd.DataFrame({
-                            'tile_y': np.full(n, int(row.tile_y) + dy,
-                                              np.int32),
-                            'tile_x': np.full(n, int(row.tile_x) + dx,
-                                              np.int32),
-                            'y': gy[sel], 'x': gx[sel]}))
-            yield (pd.concat(frames, ignore_index=True) if frames else
-                   pd.DataFrame(columns=['tile_y', 'tile_x', 'y', 'x']))
-
-    halos = tiles.mapInPandas(_emit_halo, 'tile_y int, tile_x int, '
-                                          'y int, x int')
-
-    def _apply(key, tpdf: pd.DataFrame, hpdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(tpdf):
-            return pd.DataFrame(columns=[
-                'tile_y', 'tile_x', 'y0', 'x0', 'h', 'w', 'mask', '_chg'])
-        row = tpdf.iloc[0]
-        h, w = int(row.h), int(row.w)
-        y0, x0 = int(row.y0), int(row.x0)
-        mask = _unpack_mask(row['mask'], h, w)
-        p = np.zeros((h + 2, w + 2), bool)
-        p[1:-1, 1:-1] = mask
-        if len(hpdf):
-            p[hpdf['y'].to_numpy() - y0 + 1,
-              hpdf['x'].to_numpy() - x0 + 1] = True
-        d = raster._thin_delete(p, sub)
-        # only this tile's own pixels are candidates (halo rows sit on the
-        # pad border, outside the interior window by construction)
-        changed = int(d.sum())
-        if changed:
-            mask = mask & ~d
-        prev = int(row['_chg']) if carry and '_chg' in tpdf.columns else 0
-        return pd.DataFrame([{
-            'tile_y': int(row.tile_y), 'tile_x': int(row.tile_x),
-            'y0': y0, 'x0': x0, 'h': h, 'w': w,
-            'mask': bytearray(np.packbits(mask).tobytes()),
-            '_chg': prev + changed}])
-
-    return (tiles.groupby('tile_y', 'tile_x')
-            .cogroup(halos.groupby('tile_y', 'tile_x'))
-            .applyInPandas(_apply, _THIN_SCHEMA))
-
-
 def _thin_block(tiles: DataFrame, n_sub: int) -> DataFrame:
     """``n_sub`` thinning subiterations (alternating Lam-Lee-Suen sub
     0/1) in ONE halo exchange — the halo-deepening round reduction: with
     an ``n_sub``-pixel halo, each subiteration invalidates one outer ring
     of the local window, so every OWN pixel's ``n_sub``-step evolution is
     exact (bit-identical to ``n_sub`` global subiterations). One
-    mapInPandas + one cogroup shuffle per block instead of one PER
-    SUBITERATION (``_thin_subiter``) — at scale the per-round barrier and
-    shuffle is the dominant thinning cost, and this divides the round
-    count by ``n_sub``. Requires ``n_sub`` <= min tile dimension so the
-    8-neighbor exchange covers the whole halo (thin_tiles guards).
+    mapInPandas + one cogroup shuffle per block; at scale the per-round
+    barrier and shuffle is the dominant thinning cost, and the block
+    divides the round count by ``n_sub``.
+
+    The 8-neighbor exchange serves a halo of depth H = ``n_sub`` whenever
+    H <= the grid's nominal ``tile_size``. On a shrink grid only the LAST
+    tile of each axis can be smaller than ``tile_size``, and nothing lies
+    beyond it: every pixel within H of a tile's own pixels sits either in
+    an adjacent full-size tile, or in the adjacent last tile (which it
+    covers up to the raster edge), or outside the raster (empty — the
+    kernel's zero pad). That holds for a 1-px remainder tile too.
 
     ``_chg`` counts own-pixel deletions in the LAST TWO subiterations
-    (the final full iteration) — the same convergence statistic the
-    per-subiteration path carries."""
+    (the final full iteration) — zero means that iteration deleted
+    nothing anywhere."""
     H = n_sub
 
     def _emit_halo(iterator):
@@ -390,65 +296,53 @@ def _thin_block(tiles: DataFrame, n_sub: int) -> DataFrame:
             .applyInPandas(_apply, _THIN_SCHEMA))
 
 
-def thin_tiles(spark: SparkSession, mask_tiles: DataFrame,
+def thin_tiles(spark: SparkSession, mask_tiles: DataFrame, tile_size: int,
                max_iters: int = 1024,
-               cache_registry: list | None = None,
-               min_tile_dim: int | None = None) -> DataFrame:
+               cache_registry: list | None = None) -> DataFrame:
     """Distributed morphological thinning of a tiled mask — the scale
     analogue of ``kernels.raster.thin`` (the reference's ``skm.thin``
-    preprocessing, buzzard/_footprint.py:1631): per-iteration, every tile
-    exchanges a 1-px halo with its 8 neighbors and applies the two
-    Lam-Lee-Suen subiterations simultaneously; the loop stops when a full
-    iteration deletes nothing anywhere. Output masks are bit-identical to
-    the kernel on the stitched array.
+    preprocessing, buzzard/_footprint.py:1631): every round, each tile
+    exchanges a halo with its 8 neighbors and runs the Lam-Lee-Suen
+    subiterations on its own pixels (``_thin_block``); the loop stops when
+    a full iteration deletes nothing anywhere. Output masks are
+    bit-identical to the kernel on the stitched array.
 
-    Scale shape: each iteration is two cogroup shuffles of (packed tile
-    masks + sparse border pixels) — nothing mask-sized on the driver; the
-    iteration count is O(max inscribed blob radius), the propagation lower
-    bound any parallel thinning shares. Rounds use lazy localCheckpoints
-    (one job per iteration, the convergence sum) and all round blocks are
-    released through a reliable checkpoint of the result — unless a
+    ``tile_size`` is the nominal tile size of the shrink grid the tiles
+    come from (the same argument ``polygonize`` and ``vectorize_lines``
+    take). It sizes the halo without a job: 4 px (two full iterations
+    per exchange) for ``tile_size >= 4``, else 2 px — a depth the
+    8-neighbor exchange serves on every shrink grid, remainder tiles of
+    any width included (``_thin_block``). ``tile_size < 2`` raises.
+
+    Scale shape: each round is one cogroup shuffle of (packed tile masks +
+    sparse halo pixels) — nothing mask-sized on the driver; the round
+    count is O(max inscribed blob radius), the propagation lower bound
+    any parallel thinning shares. Rounds use lazy localCheckpoints (one
+    job per round, the convergence sum) and all round blocks are released
+    through a reliable checkpoint of the result — unless a
     ``cache_registry`` list is passed (composition inside
     ``vectorize_lines``): then the round blocks land in the registry, the
     final round (already block-materialized by its convergence action)
     returns as-is, and the DOWNSTREAM operator's single reliable
-    checkpoint releases them (VERDICT r3 #2 — round 3 file-checkpointed
-    the thinned tiles here and the linework again in the caller)."""
+    checkpoint releases them."""
     from buzzard_spark.session import checkpoint_release
 
+    if tile_size < 2:
+        raise ValueError(f'thin_tiles needs tile_size >= 2: {tile_size}')
+    n_sub = 4 if tile_size >= 4 else 2
     tiles = mask_tiles.select('tile_y', 'tile_x', 'y0', 'x0', 'h', 'w',
                               'mask')
-    # Halo depth is bounded by the smallest tile dimension (the 8-neighbor
-    # exchange can only reach one tile over). Callers that know their grid
-    # pass ``min_tile_dim`` (vectorize_lines derives it from fp/tile_size
-    # — zero extra jobs); otherwise one tiny min(h,w) aggregate decides.
-    if min_tile_dim is None:
-        r = tiles.agg(F.min('h').alias('mh'), F.min('w').alias('mw')) \
-            .collect()[0]
-        min_tile_dim = min(r['mh'] or 4, r['mw'] or 4)
-    n_sub = 4 if min_tile_dim >= 4 else (2 if min_tile_dim >= 2 else 1)
     ckpts = []
-    for _ in range(0, max_iters, max(1, n_sub // 2)):
-        # TWO full iterations materialize per convergence job (the CC
-        # sig-every-other-round trick): the checked sum counts ONLY the
-        # last full iteration's deletions — zero means a full iteration
-        # deleted nothing, the sound fixpoint criterion. Worst case runs
-        # one extra iteration at the fixpoint, which deletes nothing
-        # (thinning is idempotent there), so the output mask is
-        # bit-identical at half the jobs. With n_sub >= 2 the whole block
-        # is ONE halo exchange (_thin_block halo-deepening) instead of one
-        # exchange per subiteration; 1-px tiles keep the per-subiteration
-        # path.
-        if n_sub >= 2:
-            t3 = _thin_block(tiles, n_sub).localCheckpoint(eager=False)
-        else:
-            t0 = _thin_subiter(tiles, 0, carry=False)
-            t1 = _thin_subiter(t0, 1, carry=True).localCheckpoint(
-                eager=False)
-            t3 = t1
-        ckpts.append(t3)
-        total = t3.agg(F.sum('_chg')).collect()[0][0] or 0
-        tiles = t3
+    for _ in range(0, max_iters, n_sub // 2):
+        # the checked sum counts ONLY the block's last full iteration's
+        # deletions — zero means a full iteration deleted nothing, the
+        # sound fixpoint criterion. With n_sub = 4 the worst case runs one
+        # extra iteration at the fixpoint, which deletes nothing (thinning
+        # is idempotent there), so the output mask is bit-identical at
+        # half the jobs.
+        tiles = _thin_block(tiles, n_sub).localCheckpoint(eager=False)
+        ckpts.append(tiles)
+        total = tiles.agg(F.sum('_chg')).collect()[0][0] or 0
         if total == 0:
             break
     else:
@@ -460,19 +354,12 @@ def thin_tiles(spark: SparkSession, mask_tiles: DataFrame,
     return checkpoint_release(tiles.drop('_chg'), ckpts)
 
 
-def _tile_halo_pixels(mask_tiles: DataFrame) -> DataFrame:
+def _halo_pixels(mask_tiles: DataFrame, halo: int) -> DataFrame:
     """Pixel rows (tile_y, tile_x, y, x, own bool): each tile's set pixels
-    plus a 1-pixel halo of its 8 neighbors' adjacent border pixels (halo
-    rows carry own=false). Lets every tile evaluate 3×3 neighborhoods of
-    its own pixels exactly. Emission is JVM-free only inside the pandas
-    kernel; the shuffle is keyed by destination tile."""
-    return _tile_halo_pixels_h(mask_tiles, 1)
-
-
-def _tile_halo_pixels_h(mask_tiles: DataFrame, halo: int) -> DataFrame:
-    """``_tile_halo_pixels`` with a configurable halo depth: pixels within
-    ``halo`` of a tile border replicate into the adjacent neighbor(s).
-    Requires ``halo`` <= the smallest tile dimension (one-tile reach)."""
+    plus its 8 neighbors' set pixels within ``halo`` of its border (halo
+    rows carry own=false). Emission is vectorized inside the pandas
+    kernel; the shuffle is keyed by destination tile. Exact for any
+    ``halo`` <= the grid's nominal tile size (``_thin_block``)."""
     def _emit(key, pdf: pd.DataFrame):
         tys, txs, ys_o, xs_o, owns = [], [], [], [], []
 
@@ -521,18 +408,19 @@ _EDGE_SCHEMA = ('eid long, ax int, ay int, bx int, by int, '
 
 
 def _edges_with_links(pixels: DataFrame) -> DataFrame:
-    """Fused pixel-graph edge extraction + 2×2-square collapse from ONE
-    2-px-halo view: one applyInPandas pass emits the finished edge rows
-    (eid, endpoints, square-extended endpoints ea/eb, nullable square
-    top-lefts la/lb) — replacing the separate links kernel plus the two
-    edge⨝links shuffle joins of the unfused path. Validity: an edge's far
-    endpoint b lies within 1 px of an own pixel, b's candidate squares
-    within 1 px of b, and their member pixels within 1 px again — all
-    inside the 2-px halo, so la/lb (and the row-major last-wins tie-break
-    of kernels.raster.square_links, reproduced by ascending-TL overwrite)
-    are computed exactly as the global kernel computes them. Segments
-    fully inside squares (la AND lb both set) are dropped here, exactly
-    like the unfused filter."""
+    """Pixel-graph edge extraction + 2×2-square collapse from ONE 2-px-halo
+    view (``_halo_pixels(..., 2)``): one applyInPandas pass emits the
+    finished edge rows (eid, endpoints, square-extended endpoints ea/eb,
+    nullable square top-lefts la/lb), each edge once, by the tile owning
+    its first endpoint. Validity: an edge's far endpoint b lies within
+    1 px of an own pixel, b's candidate squares within 1 px of b, and
+    their member pixels within 1 px again — all inside the 2-px halo, so
+    la/lb (and the row-major last-wins tie-break of
+    kernels.raster.square_links, reproduced by ascending-TL overwrite)
+    are computed exactly as the global kernel computes them. The 2-px
+    halo is complete on every shrink grid with ``tile_size >= 2``, 1-px
+    remainder tiles included (same argument as ``_thin_block``). Segments
+    fully inside squares (la AND lb both set) are dropped here."""
     def _emit(key, pdf: pd.DataFrame):
         cols = ['eid', 'ax', 'ay', 'bx', 'by', 'ea', 'eb', 'la', 'lb']
         if not len(pdf):
@@ -565,7 +453,7 @@ def _edges_with_links(pixels: DataFrame) -> DataFrame:
 
         # per-cell square top-left (or -1): ascending-TL overwrite — the
         # kernel's row-major last-wins tie-break (square AT the pixel wins
-        # last), identical order to the unfused _tile_links
+        # last)
         yidx, xidx = np.indices((H, W))
         tly = np.full((H, W), -1, np.int64)
         tlx = np.full((H, W), -1, np.int64)
@@ -624,13 +512,19 @@ def vectorize_lines(spark: SparkSession, fp, mask_tiles: DataFrame,
     pixel graph → merge degree-2 chains; kernel twin kernels.raster
     .find_lines, conformance pinned by tests/test_spark_raster.py).
 
+    ``tile_size`` is the nominal tile size of the fp shrink grid the
+    tiles come from; ``tile_size < 2`` raises. Both halo exchanges below
+    are exact on every such grid, however narrow its remainder tiles —
+    only the last tile of an axis can be short, and nothing lies beyond
+    it (``_thin_block``).
+
     Scale shape (mirrors ``polygonize`` — nothing mask-sized on driver):
 
     0. distributed thinning (``thin_tiles``, the reference's ``skm.thin``
-       preprocessing — round 2 assumed already-thin input and produced
-       denser linework than buzzard on blob masks),
-    1. per-tile pixel-graph edge extraction with a 1-px halo shuffle (each
-       edge emitted exactly once, by the tile owning its first endpoint),
+       preprocessing),
+    1. per-tile pixel-graph edge extraction + 2×2-square collapse from one
+       2-px halo shuffle (``_edges_with_links``; each edge emitted
+       exactly once, by the tile owning its first endpoint),
     2. node degrees = groupBy count; edges sharing a degree-2 node belong
        to one chain; intra-tile fragments contract in a per-tile
        union-find, then distributed connected components over the fragment
@@ -640,162 +534,21 @@ def vectorize_lines(spark: SparkSession, fp, mask_tiles: DataFrame,
        bound for any vectorizer's output row.
     """
     from buzzard_spark.operators.graph import connected_components
+    from buzzard_spark.session import checkpoint_release
 
-    # one reliable checkpoint for the WHOLE pipeline (VERDICT r3 #2):
-    # thin_tiles and the fragment CC register their round blocks here
-    # instead of writing their own file-backed checkpoints
+    if tile_size < 2:
+        raise ValueError(f'vectorize_lines needs tile_size >= 2: {tile_size}')
+    # one reliable checkpoint for the WHOLE pipeline: thin_tiles and the
+    # fragment CC register their round blocks here instead of writing
+    # their own file-backed checkpoints
     registry: list = []
-    # smallest tile dimension of the fp/tile_size grid (boundary tiles are
-    # the remainder) — sizes the thinning halo AND decides whether the
-    # fused 2-px-halo edge kernel may run, all without a job
-    rx, ry = (int(v) for v in fp.rsize)
-    mtd = min(min(rx % tile_size or tile_size, rx),
-              min(ry % tile_size or tile_size, ry))
     if thin_first:
-        mask_tiles = thin_tiles(spark, mask_tiles, cache_registry=registry,
-                                min_tile_dim=mtd)
-    if mtd >= 2:
-        # fused path: one 2-px-halo exchange, one applyInPandas pass that
-        # emits the FINISHED edge rows (edge extraction + square collapse
-        # + endpoint extension) — replaces the separate links kernel over
-        # the same pixels plus two edge⨝links shuffle joins below
-        pixels = _tile_halo_pixels_h(mask_tiles, 2)
-        edges_px = _edges_with_links(pixels).persist()
-        return _vectorize_chains(spark, fp, edges_px, pixels, registry,
-                                 tile_size)
-    # 1-px-min grids (degenerate boundary tiles): the 2-px halo cannot
-    # reach across such a tile, so keep the unfused 1-px-halo path
-    pixels = _tile_halo_pixels(mask_tiles).persist()
-
-    def _edges(key, pdf: pd.DataFrame):
-        # kernel edge rule (kernels.raster.find_lines): 4-neighbors always;
-        # diagonals only when no 4-connected detour exists. Vectorized on a
-        # dense local grid over the group's bbox (≤ (tile+2)² bools): each
-        # direction is one shifted-AND — no per-pixel Python (round 2
-        # looped Python sets per pixel here).
-        if not len(pdf):
-            return pd.DataFrame(columns=['ax', 'ay', 'bx', 'by', 'dir'])
-        xs = pdf['x'].to_numpy(np.int64)
-        ys = pdf['y'].to_numpy(np.int64)
-        own_rows = pdf['own'].to_numpy(bool)
-        x0, y0 = int(xs.min()) - 1, int(ys.min()) - 1
-        W = int(xs.max()) - x0 + 2
-        H = int(ys.max()) - y0 + 2
-        grid = np.zeros((H, W), bool)
-        grid[ys - y0, xs - x0] = True
-        owng = np.zeros((H, W), bool)
-        owng[ys[own_rows] - y0, xs[own_rows] - x0] = True
-
-        def _shift(a, dy, dx):
-            # out[y, x] = a[y + dy, x + dx] (zeros outside)
-            out = np.zeros_like(a)
-            ys0, ys1 = max(0, -dy), min(H, H - dy)
-            xs0, xs1 = max(0, -dx), min(W, W - dx)
-            if ys0 < ys1 and xs0 < xs1:
-                out[ys0:ys1, xs0:xs1] = a[ys0 + dy:ys1 + dy,
-                                          xs0 + dx:xs1 + dx]
-            return out
-
-        frames = []
-        for di, (dx, dy) in enumerate(((1, 0), (0, 1), (1, 1), (1, -1))):
-            pair = owng & _shift(grid, dy, dx)
-            if dx and dy:
-                pair &= ~(_shift(grid, 0, dx) | _shift(grid, dy, 0))
-            py, px = np.nonzero(pair)
-            if not len(py):
-                continue
-            ax = (px + x0).astype(np.int32)
-            ay = (py + y0).astype(np.int32)
-            frames.append(pd.DataFrame({
-                'ax': ax, 'ay': ay,
-                'bx': ax + dx, 'by': ay + dy,
-                'dir': np.full(len(ax), di, np.int32)}))
-        if not frames:
-            return pd.DataFrame(columns=['ax', 'ay', 'bx', 'by', 'dir'])
-        return pd.concat(frames, ignore_index=True)
-
-    edges_px = (pixels.groupBy('tile_y', 'tile_x')
-                .applyInPandas(_edges,
-                               'ax int, ay int, bx int, by int, dir int'))
-    def _tile_links(key, pdf: pd.DataFrame):
-        # the reference's 2×2-square collapse map, tile-local: each tile
-        # resolves its OWN pixels' square membership from the 1-px halo
-        # view (all four members of any square containing p sit inside
-        # p's 3×3 — fully visible). Row-major last-wins tie-break of
-        # kernels.raster.square_links reproduced by ascending-TL overwrite.
-        if not len(pdf):
-            return pd.DataFrame(columns=['node', 'tl'])
-        xs = pdf['x'].to_numpy(np.int64)
-        ys = pdf['y'].to_numpy(np.int64)
-        own_rows = pdf['own'].to_numpy(bool)
-        if not own_rows.any():
-            return pd.DataFrame(columns=['node', 'tl'])
-        x0, y0 = int(xs.min()) - 1, int(ys.min()) - 1
-        W = int(xs.max()) - x0 + 2
-        H = int(ys.max()) - y0 + 2
-        grid = np.zeros((H, W), bool)
-        grid[ys - y0, xs - x0] = True
-        sq = np.zeros((H, W), bool)
-        sq[:-1, :-1] = (grid[:-1, :-1] & grid[1:, :-1] &
-                        grid[:-1, 1:] & grid[1:, 1:])
-        oy = ys[own_rows] - y0
-        ox = xs[own_rows] - x0
-        tly = np.full(len(oy), -1, np.int64)
-        tlx = np.full(len(ox), -1, np.int64)
-        for dy, dx in ((1, 1), (1, 0), (0, 1), (0, 0)):  # ascending TL
-            cy, cx = oy - dy, ox - dx
-            ok = (cy >= 0) & (cx >= 0)
-            ok[ok] = sq[cy[ok], cx[ok]]
-            tly = np.where(ok, cy, tly)
-            tlx = np.where(ok, cx, tlx)
-        hit = tly >= 0
-        if not hit.any():
-            return pd.DataFrame(columns=['node', 'tl'])
-        gy = oy[hit] + y0
-        gx = ox[hit] + x0
-        return pd.DataFrame({
-            'node': gy * 2097152 + gx,
-            'tl': (tly[hit] + y0) * 2097152 + (tlx[hit] + x0)})
-
-    links = (pixels.groupBy('tile_y', 'tile_x')
-             .applyInPandas(_tile_links, 'node long, tl long'))
-
-    # pack pixel → int64 node id; edge id = (origin pixel, direction) —
-    # collision-free for rasters up to 2^21 px per side (same bound as
-    # polygonize's packed border-run nodes)
-    pk = '(CAST({y} AS BIGINT) * 2097152 + {x})'
-    edges_px = (edges_px
-                .withColumn('na', F.expr(pk.format(y='ay', x='ax')))
-                .withColumn('nb', F.expr(pk.format(y='by', x='bx')))
-                .withColumn('eid', F.expr('na * 4 + dir')))
-    # square collapse (reference steps 3/6): drop segments fully inside
-    # squares; extend endpoints to their square's top-left — connectivity
-    # (and therefore linemerge) is judged on the EXTENDED endpoints ea/eb
-    edges_px = (edges_px
-                .join(links.select(F.col('node').alias('na'),
-                                   F.col('tl').alias('la')), 'na', 'left')
-                .join(links.select(F.col('node').alias('nb'),
-                                   F.col('tl').alias('lb')), 'nb', 'left')
-                .where(F.col('la').isNull() | F.col('lb').isNull())
-                .withColumn('ea', F.coalesce('la', 'na'))
-                .withColumn('eb', F.coalesce('lb', 'nb'))
-                .persist())
-    return _vectorize_chains(spark, fp, edges_px, pixels, registry,
-                             tile_size)
-
-
-def _vectorize_chains(spark, fp, edges_px, pixels, registry,
-                      tile_size):
-    """Shared tail of vectorize_lines: degree-2 chain resolution
-    (per-tile union-find + fragment CC), per-chain assembly, and the
-    pipeline's one reliable checkpoint. ``edges_px`` must be the
-    persisted finished edge rows (eid, ax/ay/bx/by, ea, eb, la, lb)."""
-    from buzzard_spark.operators.graph import connected_components
-
+        mask_tiles = thin_tiles(spark, mask_tiles, tile_size,
+                                cache_registry=registry)
+    edges_px = _edges_with_links(_halo_pixels(mask_tiles, 2)).persist()
     if edges_px.isEmpty():
-        from buzzard_spark.session import checkpoint_release
         empty = spark.createDataFrame([], LINE_SCHEMA)
-        return checkpoint_release(empty, [edges_px, pixels] + registry)
+        return checkpoint_release(empty, [edges_px] + registry)
     ends = (edges_px.select(F.col('eid'), F.col('ea').alias('node'))
             .unionByName(edges_px.select('eid', F.col('eb').alias('node'))))
     deg2 = (ends.groupBy('node').agg(F.count('*').alias('d'),
@@ -901,12 +654,11 @@ def _vectorize_chains(spark, fp, edges_px, pixels, registry,
                          'n_pts': len(path)})
         return pd.DataFrame(rows)
 
-    from buzzard_spark.session import checkpoint_release
     out = tagged.groupBy('chain_id').applyInPandas(_assemble, LINE_SCHEMA)
     # the pipeline's ONE reliable checkpoint: materialize the linework,
     # release the persisted edge/fragment tables plus every thinning/CC
     # round block registered above (cache-lifetime contract)
-    return checkpoint_release(out, [edges_px, m, pixels] + registry)
+    return checkpoint_release(out, [edges_px, m] + registry)
 
 
 # packed node id for the border-run graph: (tile_y, tile_x, lab) → int64.
@@ -1028,31 +780,13 @@ def zonal_stats(spark: SparkSession, fp, polys: DataFrame,
     value tiles on (tile_y, tile_x) instead of recomputing — the
     aggregation shape is unchanged.
     """
-    a, b, c, d, e, f = fp._coef
-    tiles = tile_grid_df(spark, fp, tile_size)
-    tiles = tiles.select(
-        '*',
-        (F.col('x0') * a + c).alias('t_minx'),
-        ((F.col('x0') + F.col('w')) * a + c).alias('t_maxx'),
-        ((F.col('y0') + F.col('h')) * e + f).alias('t_miny'),
-        (F.col('y0') * e + f).alias('t_maxy'),
-    )
-    cand = tiles.join(
-        F.broadcast(polys),
-        (F.col('t_minx') <= F.col('maxlng')) & (F.col('t_maxx') >= F.col('minlng')) &
-        (F.col('t_miny') <= F.col('maxlat')) & (F.col('t_maxy') >= F.col('minlat')))
-
     gt = tuple(float(v) for v in fp.gt)
     vfn = value_fn if value_fn is not None else (
         lambda ys, xs: (17 * xs[None, :] + 31 * ys[:, None]) % 97)
 
     def _stats(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        from buzzard_spark.kernels.footprint import Footprint
         row = pdf.iloc[0]
-        tile_gt = list(gt)
-        tile_gt[0] = gt[0] + int(row.x0) * gt[1]
-        tile_gt[3] = gt[3] + int(row.y0) * gt[5]
-        tile_fp = Footprint(gt=tile_gt, rsize=(int(row.w), int(row.h)))
+        tile_fp = _tile_fp(gt, row)
         ys = np.arange(int(row.y0), int(row.y0) + int(row.h),
                        dtype=np.int64)
         xs = np.arange(int(row.x0), int(row.x0) + int(row.w),
@@ -1073,7 +807,8 @@ def zonal_stats(spark: SparkSession, fp, polys: DataFrame,
             out, columns=['region_id', 'n_pixels', 'v_sum', 'v_min',
                           'v_max'])
 
-    return (cand.groupBy('tile_y', 'tile_x')
+    return (_tile_candidates(spark, fp, polys, tile_size)
+            .groupBy('tile_y', 'tile_x')
             .applyInPandas(_stats, 'region_id long, n_pixels long, '
                                    'v_sum long, v_min long, v_max long')
             .groupBy('region_id')

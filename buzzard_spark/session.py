@@ -142,15 +142,5 @@ def checkpoint_release(result, cached=()):
     the returned DataFrame is GC'd (cleanCheckpoints=true)."""
     ensure_checkpoint_dir(result.sparkSession)
     out = result.checkpoint(eager=True)
-    for df in cached:
-        try:
-            df.unpersist()
-            # a localCheckpoint()ed DataFrame persists its INTERNAL RDD,
-            # which the CacheManager (Dataset.unpersist) does not manage —
-            # release the LogicalRDD's blocks directly
-            plan = df._jdf.queryExecution().analyzed()
-            if plan.getClass().getSimpleName() == 'LogicalRDD':
-                plan.rdd().unpersist(False)
-        except Exception:
-            pass
+    release_blocks(cached)
     return out

@@ -382,6 +382,40 @@ def test_small_graph_fast_paths_match_distributed(spark):
         [(f.name, f.dataType) for f in dr.schema]
 
 
+def test_many_seeds_few_edges_take_distributed_path(spark, monkeypatch):
+    """bfs_hops / sssp_hops bound the seed collect by the same cap as the
+    edge probe: 40 distinct seeds over 6 edges with cap 10 must run the
+    distributed rounds (the only path that ends in checkpoint_release)
+    and give the same labels as the fast path (cap 200k) and the forced
+    distributed path (cap 0)."""
+    from buzzard_spark import session
+    from buzzard_spark.operators.graph import bfs_hops, sssp_hops
+
+    calls = []
+    real = session.checkpoint_release
+
+    def _counting(result, cached=()):
+        calls.append(1)
+        return real(result, cached)
+
+    monkeypatch.setattr(session, 'checkpoint_release', _counting)
+    ew = [(0, 1, 3), (1, 2, 1), (2, 3, 1), (0, 3, 9), (3, 50, 2),
+          (50, 51, 4)]
+    e = spark.createDataFrame(ew, 'src long, dst long, w long')
+    # duplicates: the cap applies to DISTINCT seeds
+    s = spark.createDataFrame([(i % 40,) for i in range(80)], 'node long')
+    for op in (bfs_hops, sssp_hops):
+        fast = {tuple(r) for r in op(e, s, 4).collect()}
+        assert not calls, op.__name__
+        capped = {tuple(r) for r in
+                  op(e, s, 4, small_graph_edges=10).collect()}
+        assert len(calls) == 1, op.__name__
+        dist = {tuple(r) for r in
+                op(e, s, 4, small_graph_edges=0).collect()}
+        assert capped == fast == dist, op.__name__
+        calls.clear()
+
+
 def test_rank_fast_paths_match_distributed(spark):
     """pagerank_exact_uniform / trustrank_exact_uniform fast paths emit
     the distributed rounds' exact BIGINT scores (cap 200k vs cap 0)."""

@@ -322,25 +322,99 @@ def _stitch(rows, shape):
     return out
 
 
+def _blob_mask(rng, h, w, n=6):
+    mask = np.zeros((h, w), bool)
+    yy, xx = np.ogrid[:h, :w]
+    for _ in range(n):
+        cy, cx = rng.integers(4, h - 4), rng.integers(4, w - 4)
+        ry, rx = rng.integers(2, 8), rng.integers(2, 10)
+        mask |= ((yy - cy) ** 2 / ry ** 2 + (xx - cx) ** 2 / rx ** 2) <= 1.0
+    return mask
+
+
 @pytest.mark.parametrize('seed', [0, 1, 2])
 def test_thin_tiles_deep_halo_matches_kernel(spark, seed):
     """The halo-deepened thinning block (n_sub subiterations per exchange,
     _thin_block) must stay bit-identical to kernels.raster.thin on the
-    stitched mask — exercised at halo depth 4 (tile_size=16 grid, the
-    production configuration) AND depth 2 (ragged 3-px boundary tiles) on
-    random multi-blob masks whose thinning runs many real iterations."""
+    stitched mask — exercised at halo depth 4 (tile_size 16, the
+    production configuration, and 6) AND depth 2 (tile_size 2) on random
+    multi-blob masks whose thinning runs many real iterations. The 37×49
+    grid leaves a 1-px remainder tile on both axes at tile_size 6 and 2,
+    with set pixels on that last row and column."""
     rng = np.random.default_rng(seed)
-    mask = np.zeros((39, 54), bool)
-    for _ in range(6):
-        cy, cx = rng.integers(4, 35), rng.integers(4, 50)
-        ry, rx = rng.integers(2, 8), rng.integers(2, 10)
-        yy, xx = np.ogrid[:39, :54]
-        mask |= ((yy - cy) ** 2 / max(ry, 1) ** 2 +
-                 (xx - cx) ** 2 / max(rx, 1) ** 2) <= 1.0
-    want = raster.thin(mask)
-    assert want.sum() > 0 and (want != mask).any()
-    for ts in (16, 6):
-        tiles = _mask_tiles_df(spark, mask, ts)
-        got_rows = raster_ops.thin_tiles(spark, tiles).collect()
-        got = _stitch(got_rows, mask.shape)
-        assert (got == want).all(), f'tile_size={ts} mismatch'
+    full = _blob_mask(rng, 39, 54)
+    yy, xx = np.ogrid[:37, :49]
+    ragged = _blob_mask(rng, 37, 49) | (
+        (yy - 34) ** 2 / 16 + (xx - 44) ** 2 / 36 <= 1.0)
+    assert ragged[-1].any() and ragged[:, -1].any()
+    for mask, sizes in ((full, (16, 6)), (ragged, (6, 2))):
+        want = raster.thin(mask)
+        assert want.sum() > 0 and (want != mask).any()
+        for ts in sizes:
+            tiles = _mask_tiles_df(spark, mask, ts)
+            got_rows = raster_ops.thin_tiles(spark, tiles, ts).collect()
+            got = _stitch(got_rows, mask.shape)
+            assert (got == want).all(), f'{mask.shape} tile_size={ts}'
+
+
+def _vectorize_remainder_mask(kind):
+    """29×22 masks (tile_size 7 leaves a 1-px last column AND row) with
+    set pixels on that last row/column: thin lines with a junction and a
+    diagonal ending in the corner pixel, filled blobs the thinning must
+    erode across the remainder seam, or (unthinned) lines carrying 2×2
+    squares whose far members sit 2 px from the 1-px tiles."""
+    fp = Footprint(tl=(0, 22), size=(29, 22), rsize=(29, 22))
+    if kind == 'squares':
+        # an edge out of a 1-px tile (or across a seam into one) whose
+        # far endpoint lies in a square with members 2 px away
+        mask = np.zeros((22, 29), bool)
+        mask[2:7, 28] = True           # last column, down across y 6|7
+        mask[7:9, 27:29] = True        # into square TL (27, 7)
+        mask[9, 18:27] = True
+        mask[21, 3:13] = True          # last row, diagonal up into
+        mask[19:21, 13:15] = True      # square TL (13, 19)
+        mask[10:19, 14] = True
+        mask[14:20, 28] = True         # square across the column seam
+        mask[12:14, 27:29] = True
+        return fp, mask
+    if kind == 'lines':
+        lines = [
+            np.asarray([(2.5, 0.5), (26.5, 0.5)]),       # last row
+            np.asarray([(28.5, 20.5), (28.5, 2.5)]),     # last column
+            np.asarray([(10.5, 10.5), (28.5, 10.5)]),    # junction on it
+            np.asarray([(20.5, 8.5), (28.5, 0.5)]),      # diagonal to corner
+        ]
+        return fp, raster.burn_lines(fp, lines)
+    rects = [[(15.0, 6.0), (29.0, 6.0), (29.0, 0.0), (15.0, 0.0)],
+             [(22.0, 21.0), (29.0, 21.0), (29.0, 9.0), (22.0, 9.0)],
+             [(2.0, 20.0), (10.0, 20.0), (10.0, 12.0), (2.0, 12.0)]]
+    return fp, raster.burn_polygons(
+        fp, [[np.asarray(r + [r[0]], dtype=np.float64)] for r in rects])
+
+
+@pytest.mark.parametrize('kind,ts', [('lines', 7), ('blobs', 7),
+                                     ('squares', 7), ('lines', 2)])
+def test_vectorize_lines_one_px_remainder_matches_kernel(spark, kind, ts):
+    """vectorize_lines (thinning + 2-px-halo edge extraction) on grids
+    whose last tile column/row is 1 px wide must equal find_lines on the
+    stitched mask."""
+    fp, mask = _vectorize_remainder_mask(kind)
+    assert mask[-1].any() and mask[:, -1].any()
+    assert 29 % ts == 1
+    thin_first = kind != 'squares'
+    got_rows = raster_ops.vectorize_lines(
+        spark, fp, _mask_tiles_df(spark, mask, ts), tile_size=ts,
+        thin_first=thin_first).collect()
+    got = [geometry.wkb_decode(bytes(r['wkb']))[1] for r in got_rows]
+    want = raster.find_lines(fp, mask, thin_first=thin_first)
+    assert got and _canon_lines(got) == _canon_lines(want)
+
+
+def test_raster_line_ops_reject_tile_size_one(spark):
+    """tile_size 1 is the one shrink grid the 2-px halo cannot serve."""
+    fp = Footprint(tl=(0, 4), size=(4, 4), rsize=(4, 4))
+    tiles = _mask_tiles_df(spark, np.ones((4, 4), bool), 1)
+    with pytest.raises(ValueError, match='tile_size'):
+        raster_ops.thin_tiles(spark, tiles, 1)
+    with pytest.raises(ValueError, match='tile_size'):
+        raster_ops.vectorize_lines(spark, fp, tiles, tile_size=1)
